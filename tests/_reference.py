@@ -76,6 +76,10 @@ def _install_shims() -> None:
         sys.modules["joblib"] = joblib
 
 
+#: skip reason of every reference-parity test; conftest counts it in the summary
+REFERENCE_SKIP = "reference library not available"
+
+
 def load_reference():
     """Return the reference ``binning`` module, or None if unavailable."""
     _install_shims()

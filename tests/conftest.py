@@ -8,6 +8,8 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from tests._reference import REFERENCE_SKIP, load_reference  # noqa: E402
+
 warnings.filterwarnings("ignore")
 
 
@@ -22,12 +24,28 @@ def spark():
 
 @pytest.fixture(scope="session")
 def reference():
-    from tests._reference import load_reference
-
     ref = load_reference()
     if ref is None:
-        pytest.skip("reference library not available")
+        pytest.skip(REFERENCE_SKIP)
     return ref
+
+
+def pytest_sessionstart(session):
+    if load_reference() is None:
+        session.config.pluginmanager.get_plugin("terminalreporter").write_line(
+            "WARNING: the reference binning library is not importable "
+            "(tests/_reference.py); reference-parity tests will skip",
+            yellow=True,
+        )
+
+
+def pytest_terminal_summary(terminalreporter):
+    skipped = terminalreporter.stats.get("skipped", [])
+    n = sum(1 for r in skipped if REFERENCE_SKIP in str(r.longrepr))
+    if n:
+        terminalreporter.write_line(
+            f"{n} reference-parity tests skipped: {REFERENCE_SKIP}", yellow=True
+        )
 
 
 @pytest.fixture(scope="session")

@@ -32,7 +32,7 @@ from woe_monotonic_binning_spark._algo import (
     ztest_merge,
 )
 
-from tests._reference import load_reference
+from tests._reference import REFERENCE_SKIP, load_reference
 from tests.test_fit_parity import assert_bins_equal
 from tests.test_fuzz_parity import _direction_unambiguous, _ztest_ties_unambiguous
 from tests.test_properties import summary_of
@@ -218,7 +218,7 @@ ADVERSARIAL_FIXTURES = {
 _compared = []
 
 
-@pytest.mark.skipif(ref is None, reason="reference library not available")
+@pytest.mark.skipif(ref is None, reason=REFERENCE_SKIP)
 @pytest.mark.parametrize("name", sorted(ADVERSARIAL_FIXTURES))
 def test_fit_variable_adversarial_fixture_matches_reference(name):
     pdf, overrides = ADVERSARIAL_FIXTURES[name]
@@ -253,7 +253,7 @@ def test_fit_variable_adversarial_fixture_matches_reference(name):
     _compared.append(name)
 
 
-@pytest.mark.skipif(ref is None, reason="reference library not available")
+@pytest.mark.skipif(ref is None, reason=REFERENCE_SKIP)
 def test_adversarial_suite_is_not_vacuous():
     """At least 3 of the 5 fixtures must have actually compared (not
     skipped into the undefined-parity deviations) — otherwise the suite

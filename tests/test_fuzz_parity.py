@@ -22,12 +22,12 @@ from hypothesis import HealthCheck, assume, given, settings, strategies as st
 
 from woe_monotonic_binning_spark._algo import FitParams, fit_variable
 
-from tests._reference import load_reference
+from tests._reference import REFERENCE_SKIP, load_reference
 from tests.test_fit_parity import assert_bins_equal
 from tests.test_properties import summary_of
 
 ref = load_reference()
-pytestmark = pytest.mark.skipif(ref is None, reason="reference library not available")
+pytestmark = pytest.mark.skipif(ref is None, reason=REFERENCE_SKIP)
 
 
 @st.composite

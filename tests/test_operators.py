@@ -1971,7 +1971,6 @@ def test_media_feature_extraction_composes_with_similarity(spark):
     from woe_monotonic_binning_spark.operators.multimodal import (
         extract_features,
         media_from_documents,
-        resize_media,
     )
     from woe_monotonic_binning_spark.operators.similarity import brute_force_topk
 
@@ -1989,12 +1988,6 @@ def test_media_feature_extraction_composes_with_similarity(spark):
     emb = feats.select(F.col("media_id").alias("vec_id"), F.col("feature").alias("embedding"))
     top = brute_force_topk(emb, emb.limit(3), k=5)
     assert top.groupBy("query_id").count().filter("count != 5").count() == 0
-
-    resized = resize_media(media, 224, 224)
-    row = resized.select("meta.width", "meta.height", "meta.mime").first()
-    assert (row["width"], row["height"]) == (224, 224)
-    assert row["mime"] == "application/x-fake-resized"
-    assert resized.count() == docs.count()
 
 
 def test_winnowing_fingerprints_detect_local_overlap(spark):
@@ -2678,7 +2671,6 @@ def test_multimodal_kernels_tolerate_null_payloads(spark):
     from woe_monotonic_binning_spark.operators.multimodal import (
         extract_features,
         fake_decode_stats,
-        resize_media,
     )
 
     rows = [
@@ -2695,8 +2687,6 @@ def test_multimodal_kernels_tolerate_null_payloads(spark):
     assert stats[2].n_bytes is None and stats[2].checksum is None
     feats = {r.media_id: r.feature for r in extract_features(media, dim=4).collect()}
     assert feats[1] is not None and feats[2] is None
-    resized = {r.media_id: r.meta for r in resize_media(media, 8, 8).collect()}
-    assert resized[1]["width"] == 8 and resized[2] is None
 
 
 def test_sample_frames_covers_partial_interval_and_skips_empty(spark):

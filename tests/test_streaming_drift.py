@@ -7,7 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from woe_monotonic_binning_spark.drift import baseline_fractions
+from woe_monotonic_binning_spark.drift import baseline_fractions, psi_report, psi_summary
 from woe_monotonic_binning_spark.streaming.drift import streaming_psi_monitor
 
 SF = "/root/testdata/sf0.001"
@@ -34,7 +34,7 @@ def li(spark):
     return spark.read.parquet(f"{SF}/lineitem.parquet")
 
 
-def _run_monitor(spark, tmp_path, src_df, baseline, n_files=1):
+def _run_monitor(spark, tmp_path, src_df, baseline, n_files=1, bins=QTY_BINS):
     src = str(tmp_path / "src")
     src_df.repartition(n_files).write.mode("overwrite").parquet(src)
     stream = spark.readStream.schema(src_df.schema).option(
@@ -43,7 +43,7 @@ def _run_monitor(spark, tmp_path, src_df, baseline, n_files=1):
     metrics = str(tmp_path / "metrics")
     q = streaming_psi_monitor(
         stream,
-        QTY_BINS,
+        bins,
         baseline,
         metrics,
         checkpoint_dir=str(tmp_path / "ckpt"),
@@ -60,6 +60,34 @@ def test_stream_identical_to_baseline_reads_stable(spark, li, tmp_path):
     assert got[0]["n_rows"] == li.count()
     assert got[0]["psi"] == pytest.approx(0.0, abs=1e-12)
     assert got[0]["status"] == "stable"
+
+
+def test_stream_psi_equals_batch_report(spark, li, tmp_path):
+    """One micro-batch scored against a baseline_fractions baseline gives
+    the per-variable PSI of psi_summary(psi_report(expected, batch)), and
+    the baseline's expected_frac is psi_report's — the pinned baseline,
+    the streaming monitor and the batch report share one fraction/PSI
+    tail.  A descending bins table, an out-of-range tail and a bin the
+    batch abandons (clamped at min_frac) all take part."""
+    price = _bins(
+        "l_extendedprice", (90000.0, 30000.0, 10000.0, 900.0), (0.3, 0.0, -0.2)
+    ).assign(iv_components=0.2)
+    bins = pd.concat([QTY_BINS, price], ignore_index=True)
+    batch = li.filter(F.col("l_quantity") > 10)
+    base = baseline_fractions(li, bins)
+    report = psi_report(li, batch, bins)
+
+    want_frac = {
+        (r.variable, r.bin): r.expected_frac
+        for r in report.select("variable", "bin", "expected_frac").collect()
+    }
+    assert {(r.variable, r.bin): r.expected_frac for r in base.itertuples()} == want_frac
+
+    want_psi = {r.variable: r.psi for r in psi_summary(report).collect()}
+    got = _run_monitor(spark, tmp_path, batch, base, bins=bins).collect()
+    assert {r.variable: r.psi for r in got} == pytest.approx(want_psi, rel=1e-12)
+    assert set(want_psi) == {"l_quantity", "l_extendedprice"}
+    assert all(r.n_rows == batch.count() and r.batch_id == 0 for r in got)
 
 
 def test_drifted_stream_alerts(spark, li, tmp_path):

@@ -22,8 +22,8 @@ infinite).  Conventional reading: < 0.1 stable, 0.1–0.25 shifting,
 
 Scale posture (the 100 TB read):
 
-- Each frame pays ONE pass: the per-variable bin index is the same
-  whole-stage-codegen CASE chain as the encoder, melted to
+- Each frame pays ONE pass: the per-variable bin index is the encoder's
+  own whole-stage-codegen CASE chain (``transform._cut_case``), melted to
   ``(variable, bin)`` pairs and partially aggregated map-side, so the one
   shuffle carries at most ``tasks x variables x (bins+2)`` count rows —
   never data rows.
@@ -41,7 +41,7 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .transform import _bins_to_pandas, compile_bin_exprs
+from .transform import _ascending, _bins_to_pandas, _cut_case, _melt_pairs, compile_bin_exprs
 
 #: bin-index sentinels for the two non-fitted buckets
 OUT_OF_RANGE = -1
@@ -140,22 +140,13 @@ def _nullsafe_left(left: DataFrame, right: DataFrame, keys, ns_key: str) -> Data
 
 
 def _bin_index_expr(value: Column, cuts: Sequence[float]) -> Column:
-    """Bin index (0-based, ascending) for ``value`` under ``cuts`` — the
-    index twin of ``transform._encode_column`` (same ``pd.cut`` closure
-    semantics, binning.py:286-303): ascending cuts give ``[c_i, c_{i+1})``
-    with the lowest edge included, a descending bins table flips to
-    ``(c_i, c_{i+1}]``.  NULL/NaN -> ``MISSING``; outside the cut span
-    (NULL under the encoder) -> ``OUT_OF_RANGE``."""
-    ascending = not (cuts[0] > cuts[-1])
-    cs = [float(c) for c in (cuts if ascending else reversed(cuts))]
+    """Bin index (0-based, ascending) for ``value`` under ``cuts``: the
+    encoder's :func:`~.transform._cut_case` chain labelled with bin
+    indices.  NULL/NaN -> ``MISSING``; outside the cut span (NULL under the
+    encoder) -> ``OUT_OF_RANGE``."""
+    ascending, cs, _ = _ascending(cuts)
     n = len(cs) - 1
-    expr = None
-    for i in range(n):
-        hi = F.lit(cs[i + 1])
-        cond = (value < hi) if ascending else (value <= hi)
-        expr = F.when(cond, F.lit(i)) if expr is None else expr.when(cond, F.lit(i))
-    lo = F.lit(cs[0])
-    in_range = (value >= lo) if ascending else (value > lo)
+    chain, in_range = _cut_case(value, ascending, cs, range(n))
     # beyond the TOP cut the inner chain matches nothing (the encoder maps
     # it to NULL, pd.cut right-open semantics) — fall through to the
     # out-of-range bucket instead of a NULL bin.  Exception: an explicit
@@ -169,8 +160,17 @@ def _bin_index_expr(value: Column, cuts: Sequence[float]) -> Column:
     )
     return (
         F.when(value.isNull() | F.isnan(value), F.lit(MISSING))
-        .when(in_range, F.coalesce(expr, fall_through))
+        .when(in_range, F.coalesce(chain, fall_through))
         .otherwise(F.lit(OUT_OF_RANGE))
+    )
+
+
+def _bin_melt(df: DataFrame, specs, carry: Sequence[str] = ()) -> DataFrame:
+    """Long ``(variable, bin, *carry)`` frame: every row's bin index under
+    every spec."""
+    return _melt_pairs(
+        df, [(v, _bin_index_expr(F.col(v).cast("double"), cuts)) for v, cuts, _ in specs],
+        "bin", carry,
     )
 
 
@@ -188,21 +188,9 @@ def bin_histogram(
     aggregation collapses it before the shuffle, so shuffle volume is
     bounded by distinct keys per task, not by row count.  Each ``sum_cols``
     entry adds a ``sum_<col>`` column."""
-    pairs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(v).alias("variable"),
-                    _bin_index_expr(F.col(v).cast("double"), cuts).alias("bin"),
-                )
-                for v, cuts, _ in specs
-            ]
-        )
-    ).alias("p")
-    melted = df.select(*extra_cols, *sum_cols, pairs).select(
-        "p.variable", "p.bin", *extra_cols, *sum_cols
-    )
-    return melted.groupBy("variable", "bin", *extra_cols).agg(
+    return _bin_melt(df, specs, (*extra_cols, *sum_cols)).groupBy(
+        "variable", "bin", *extra_cols
+    ).agg(
         F.count(F.lit(1)).alias("count"),
         *[F.sum(c).alias(f"sum_{c}") for c in sum_cols],
     )
@@ -214,8 +202,7 @@ def _scaffold(spark, specs) -> DataFrame:
     actual population abandoned entirely is the loudest drift signal)."""
     rows = []
     for v, cuts, _ in specs:
-        ascending = not (cuts[0] > cuts[-1])
-        cs = [float(c) for c in (cuts if ascending else reversed(cuts))]
+        cs = _ascending(cuts)[1]
         for i in range(len(cs) - 1):
             rows.append((v, i, cs[i], cs[i + 1]))
         rows.append((v, OUT_OF_RANGE, None, None))
@@ -225,30 +212,31 @@ def _scaffold(spark, specs) -> DataFrame:
     )
 
 
-def _fractions(hist: DataFrame, scaffold: DataFrame, prefix: str) -> DataFrame:
-    # Totals as a WINDOW over the scaffold-joined frame, not a second
-    # aggregation of `hist`: hist's lineage is a full corpus scan, and a
-    # separate groupBy+join would re-evaluate it — two scans per frame
-    # (four per psi_report), caught in the round-7 plan audit.  The window
-    # runs over variables x (bins+2) rows; the scaffold is exhaustive, so
-    # every hist row matches exactly one scaffold row and the window sum
-    # IS the frame total.
+def _fractions(buckets: DataFrame, hist: DataFrame, counts: dict[str, str]) -> DataFrame:
+    """Left-join per-(variable, bin) counts onto an exhaustive bucket frame
+    and add, per ``{hist column: side}``, ``<side>_count`` (0 for an empty
+    bucket) and ``<side>_frac`` (its share of the variable's total) — the
+    fraction step of the batch PSI, the pinned baseline and every streaming
+    micro-batch.
+
+    Totals are a WINDOW over the joined frame, not a second aggregation of
+    ``hist``: hist's lineage is a full corpus scan, and a separate
+    groupBy+join would re-evaluate it — two scans per frame (round-7 plan
+    audit).  The window runs over variables x (bins+2) rows; the bucket
+    frame is exhaustive, so every hist row matches exactly one bucket row
+    and the window sum IS the frame total."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("variable")
-    joined = scaffold.join(hist, ["variable", "bin"], "left").withColumn(
-        "__cnt", F.coalesce(F.col("count"), F.lit(0))
-    )
-    return joined.select(
-        "variable",
-        "bin",
-        "interval_lo",
-        "interval_hi",
-        F.col("__cnt").alias(f"{prefix}_count"),
-        (
-            F.col("__cnt") / F.greatest(F.sum("__cnt").over(w), F.lit(1))
-        ).alias(f"{prefix}_frac"),
-    )
+    out = buckets.join(hist, ["variable", "bin"], "left")
+    for col, side in counts.items():
+        out = out.withColumn(f"{side}_count", F.coalesce(F.col(col), F.lit(0)))
+    for side in counts.values():
+        out = out.withColumn(
+            f"{side}_frac",
+            F.col(f"{side}_count") / F.greatest(F.sum(f"{side}_count").over(w), F.lit(1)),
+        )
+    return out
 
 
 def _psi_component(e: Column, a: Column, min_frac: float) -> Column:
@@ -367,9 +355,6 @@ def _psi_detail_from_specs(
     # aggregation collapses exactly as before, and the per-(variable, bin)
     # counts — and everything derived from them — are value-identical to
     # the two-pass form.
-    from pyspark.sql.window import Window
-
-    scaffold = _scaffold(expected.sparkSession, specs)
     names = [v for v, _, _ in specs]
     tagged = (
         expected.select(*[F.col(v).cast("double").alias(v) for v in names])
@@ -379,33 +364,17 @@ def _psi_detail_from_specs(
             .withColumn("__side", F.lit(1))
         )
     )
-    pairs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(v).alias("variable"),
-                    _bin_index_expr(F.col(v), cuts).alias("bin"),
-                )
-                for v, cuts, _ in specs
-            ]
-        )
-    ).alias("p")
-    hist = (
-        tagged.select("__side", pairs)
-        .select("p.variable", "p.bin", "__side")
-        .groupBy("variable", "bin")
-        .agg(
-            F.count(F.when(F.col("__side") == 0, F.lit(1))).alias("__ec"),
-            F.count(F.when(F.col("__side") == 1, F.lit(1))).alias("__ac"),
-        )
+    side = F.col("__side")
+    return _psi_detail(
+        tagged, specs, "__side", F.count(F.when(side == 0, F.lit(1))),
+        F.count(F.when(side == 1, F.lit(1))), min_frac,
     )
-    return _psi_finish(scaffold, hist, min_frac)
 
 
 def _psi_detail_one_scan(
     source: DataFrame, specs, min_frac: float, actual_filter
 ) -> DataFrame:
-    # Shared-scan twin of _psi_detail_from_specs (round 18, guide §6): when
+    # Shared-scan form of _psi_detail_from_specs (round 18, guide §6): when
     # the actual population is a filter of the expected one, one scan of
     # the source feeds BOTH count columns — the expected count is every
     # row, the actual count is `count(when(predicate, 1))` in the same
@@ -413,57 +382,30 @@ def _psi_detail_one_scan(
     # value-identical to the two-frame form, with half the scan+explode
     # work and no union.
     pred = F.expr(actual_filter) if isinstance(actual_filter, str) else actual_filter
-    scaffold = _scaffold(source.sparkSession, specs)
-    names = [v for v, _, _ in specs]
     proj = source.select(
-        *[F.col(v).cast("double").alias(v) for v in names],
+        *[F.col(v).cast("double").alias(v) for v, _, _ in specs],
         pred.alias("__in_actual"),
     )
-    pairs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(v).alias("variable"),
-                    _bin_index_expr(F.col(v), cuts).alias("bin"),
-                )
-                for v, cuts, _ in specs
-            ]
-        )
-    ).alias("p")
-    hist = (
-        proj.select("__in_actual", pairs)
-        .select("p.variable", "p.bin", "__in_actual")
-        .groupBy("variable", "bin")
-        .agg(
-            F.count(F.lit(1)).alias("__ec"),
-            F.count(F.when(F.col("__in_actual"), F.lit(1))).alias("__ac"),
-        )
+    return _psi_detail(
+        proj, specs, "__in_actual", F.count(F.lit(1)),
+        F.count(F.when(F.col("__in_actual"), F.lit(1))), min_frac,
     )
-    return _psi_finish(scaffold, hist, min_frac)
 
 
-def _psi_finish(scaffold: DataFrame, hist: DataFrame, min_frac: float) -> DataFrame:
-    """Scaffold join + per-variable fractions + PSI component — the shared
-    tail of the two-frame and one-scan detail paths."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("variable")
-    joined = (
-        scaffold.join(hist, ["variable", "bin"], "left")
-        .withColumn("expected_count", F.coalesce(F.col("__ec"), F.lit(0)))
-        .withColumn("actual_count", F.coalesce(F.col("__ac"), F.lit(0)))
-        .withColumn(
-            "expected_frac",
-            F.col("expected_count")
-            / F.greatest(F.sum("expected_count").over(w), F.lit(1)),
-        )
-        .withColumn(
-            "actual_frac",
-            F.col("actual_count")
-            / F.greatest(F.sum("actual_count").over(w), F.lit(1)),
-        )
+def _psi_detail(
+    frame: DataFrame, specs, side_col: str, expected_n: Column, actual_n: Column,
+    min_frac: float,
+) -> DataFrame:
+    """The PSI detail body: melt ``frame`` to bin indices, count both
+    populations per (variable, bin) in one aggregation (``side_col`` tells
+    them apart), then fractions and clamped components over the scaffold."""
+    hist = _bin_melt(frame, specs, [side_col]).groupBy("variable", "bin").agg(
+        expected_n.alias("__ec"), actual_n.alias("__ac")
     )
-    return joined.select(
+    fr = _fractions(
+        _scaffold(frame.sparkSession, specs), hist, {"__ec": "expected", "__ac": "actual"}
+    )
+    return fr.select(
         "variable",
         "bin",
         _bucket_label().alias("bucket"),
@@ -503,7 +445,7 @@ def baseline_fractions(
         raise ValueError("no variables survive the bin gates; nothing to pin")
     scaffold = _scaffold(expected.sparkSession, specs)
     return (
-        _fractions(bin_histogram(expected, specs), scaffold, "expected")
+        _fractions(scaffold, bin_histogram(expected, specs), {"count": "expected"})
         .select("variable", "bin", "expected_frac")
         .toPandas()
     )
@@ -671,9 +613,7 @@ def characteristic_stability(
         [
             (v, i, float(w))
             for v, cuts, woes in specs
-            for i, w in enumerate(
-                woes if not (cuts[0] > cuts[-1]) else list(reversed(woes))
-            )
+            for i, w in enumerate(_ascending(cuts, woes)[2])
         ],
         "variable string, bin int, woe_fitted double",
     )

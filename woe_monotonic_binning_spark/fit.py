@@ -53,42 +53,31 @@ def melt_features(df: DataFrame, target: str, columns: Sequence[str]) -> DataFra
     (binning.py:90,96) with one unpivot; Catalyst prunes the parquet scan to
     exactly ``columns + [target]``.
     """
+    return _melt(df, target, columns, list(columns))
+
+
+def _melt(df: DataFrame, target: str, columns: Sequence[str], keys: Sequence[str]) -> DataFrame:
+    """The body of :func:`melt_features` with ``keys[i]`` as the
+    ``variable`` value of ``columns[i]``.
+
+    ``fit_bins`` keys by the column INDEX as a short decimal string ("0",
+    "1", ...) instead of the name (round 18, guide §2.3 "shuffle fewer
+    bytes"): the key rides every melted row through the one raw-data
+    shuffle, both hash-aggregate key probes and the quantize range
+    repartition, and a 1-2 byte key against 10-20 byte column names cuts
+    the key bytes and the per-row string hashing on all of them.  The fit
+    UDF maps indices back to names (``_fit_udf(params, names=...)``), so
+    the bins output is byte-identical (pinned by
+    tests/test_fit_parity.py::test_fit_indexed_melt_matches_names).
+    """
     # try_cast, not cast: under ANSI mode (Spark 4 default) a single malformed
     # value would fail the whole job; malformed/non-numeric values become the
     # missing group instead (pandas-style coercion).
     casted = df.select(
         F.col(target).cast("double").alias("__target"),
-        *[F.expr(f"try_cast(`{c}` as double)").alias(c) for c in columns],
+        *[F.expr(f"try_cast(`{c}` as double)").alias(k) for c, k in zip(columns, keys)],
     )
-    long = casted.unpivot("__target", list(columns), "variable", "value")
-    return long.withColumn(
-        "value", F.when(F.isnan("value"), F.lit(None).cast("double")).otherwise(F.col("value"))
-    )
-
-
-def _melt_features_indexed(df: DataFrame, target: str, columns: Sequence[str]) -> DataFrame:
-    """``melt_features`` with the variable key carried as the column INDEX
-    rendered as a short decimal string ("0", "1", ...) instead of the
-    column name (round 18, guide §2.3 "shuffle fewer bytes").
-
-    The variable key rides EVERY row of the melted long table through the
-    one raw-data shuffle, both hash-aggregate key probes, and the quantize
-    range repartition; a 1-2 byte key against 10-20 byte column names cuts
-    the key bytes and the per-row string hashing/comparison work on all of
-    them.  Internal to ``fit_bins`` — the fit UDF maps indices back to
-    names (``_fit_udf(params, names=...)``), so the bins output is
-    byte-identical; the public ``melt_features`` keeps the name-keyed
-    shape.  Value-parity pinned by
-    tests/test_fit_parity.py::test_fit_indexed_melt_matches_names.
-    """
-    casted = df.select(
-        F.col(target).cast("double").alias("__target"),
-        *[
-            F.expr(f"try_cast(`{c}` as double)").alias(str(i))
-            for i, c in enumerate(columns)
-        ],
-    )
-    long = casted.unpivot("__target", [str(i) for i in range(len(columns))], "variable", "value")
+    long = casted.unpivot("__target", list(keys), "variable", "value")
     return long.withColumn(
         "value", F.when(F.isnan("value"), F.lit(None).cast("double")).otherwise(F.col("value"))
     )
@@ -291,9 +280,9 @@ def _fit_udf(params: FitParams, names: Sequence[str] | None = None):
     # the value (the reference IndexErrors on the empty sep partition,
     # binning.py:35-42).
     #
-    # ``names`` (round 18): when fit_bins melts with the index-keyed
-    # variable column (_melt_features_indexed), this maps the short key
-    # back to the real column name so the bins table is unchanged.
+    # ``names`` (round 18): fit_bins melts with the column index as the
+    # variable key (_melt), so this maps the short key back to the real
+    # column name and the bins table is unchanged.
     def fit_one(pdf: pd.DataFrame) -> pd.DataFrame:
         name = names[int(pdf["variable"].iloc[0])] if names is not None else None
         summary = _algo.summary_from_pandas(pdf, variable=name)
@@ -357,7 +346,7 @@ def fit_bins(
         merge_threshold=merge_threshold,
         sep_value=sep_value,
     )
-    long = _melt_features_indexed(df, target, columns)
+    long = _melt(df, target, columns, [str(i) for i in range(len(columns))])
     summary = summarize(long)
     if max_distinct == "auto":
         max_distinct = AUTO_MAX_DISTINCT

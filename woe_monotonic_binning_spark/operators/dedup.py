@@ -374,7 +374,7 @@ def minhash_dedup_pairs(
     max_bucket: int = 1_000,
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup pipeline: shingle -> sign -> band ->
-    bucket-join -> exact-Jaccard verify.
+    bucket-join -> Jaccard verify on hashed shingle sets.
 
     ``max_bucket`` is the skew guard (previously hardcoded): an LSH band
     bucket holding k documents emits O(k^2) candidate pairs, so one hot
@@ -392,6 +392,18 @@ def minhash_dedup_pairs(
     split a component when the anchor edge fails exact verification.
     ``max_bucket=10_000`` restores the previous recall at the previous
     quadratic cost; see ``lsh_candidate_pairs`` for the full trade.
+
+    **Hash-collision caveat:** the verify step computes Jaccard over each
+    document's set of 31-bit shingle hashes (``pmod(xxhash64(shingle),
+    2^31 - 1)``), not over the shingle strings.  If two distinct shingles
+    of a pair hash to the same value, they count as one shared shingle, so
+    the reported ``jaccard`` can exceed the string-set Jaccard and a pair
+    just below ``threshold`` can be returned.  For a pair whose shingle
+    union has ``u`` members the chance of any collision is about
+    ``u^2 / 2^32`` (~2e-6 at ``u = 100``).  The MinHash signatures and LSH
+    bands are computed from the same hashes, so verification agrees with
+    the candidates it checks.  Re-verify the returned pairs on the string
+    shingle sets if string-exact Jaccard is required.
 
     The input is repartitioned to the session default parallelism before the
     shingle/signature HOFs: document corpora often arrive as a few large

@@ -16,8 +16,8 @@ decoder for RIFF/WAV PCM16 (round 11, stdlib struct + numpy);
 ``resize_image`` is a REAL nearest-neighbor resampler over the decodable
 formats, re-encoding to P6 (round 11).  Compressed audio and video
 codecs still need libraries this container lacks, so those paths stay
-stubbed (``fake_decode_stats`` byte features, ``resize_media``
-metadata-only) with everything Spark-side (schema, batch iteration,
+stubbed (``fake_decode_stats`` byte features) with everything
+Spark-side (schema, batch iteration,
 partition sizing, UDF signatures) real and tested; the ``codec=`` hook
 on both decoders is the library escape hatch.  ``synthetic_ppm_media`` /
 ``synthetic_png_media`` / ``synthetic_jpeg_media`` /
@@ -38,11 +38,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-
-MEDIA_SCHEMA = (
-    "media_id bigint, kind string, content binary, "
-    "meta struct<mime: string, width: int, height: int, duration_ms: int>"
-)
 
 DECODED_STATS_SCHEMA = (
     "media_id bigint, kind string, n_bytes int, checksum string, "
@@ -3539,35 +3534,3 @@ def extract_features(media: DataFrame, dim: int = 16) -> DataFrame:
             yield pd.DataFrame({"media_id": pdf["media_id"], "feature": feats})
 
     return media.mapInPandas(embed, schema=FEATURES_SCHEMA)
-
-
-def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing with the codec stubbed: metadata is rewritten to the
-    target dimensions and payloads pass through untouched (a real resizer
-    replaces the per-batch body; the batch iteration, schema and partition
-    shape are what it would use).  Marked fake via ``meta.mime``; a NULL
-    input ``meta`` stays NULL."""
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            meta = [
-                {
-                    "mime": "application/x-fake-resized",
-                    "width": width,
-                    "height": height,
-                    "duration_ms": m["duration_ms"],
-                }
-                if m is not None
-                else None
-                for m in pdf["meta"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "content": pdf["content"],
-                    "meta": meta,
-                }
-            )
-
-    return media.mapInPandas(resize, schema=MEDIA_SCHEMA)

@@ -119,39 +119,20 @@ def streaming_psi_monitor(
     token = _query_token(checkpoint_dir)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql.window import Window
-
         spark = batch_df.sparkSession
-        hist = bin_histogram(batch_df, specs)
         base = spark.createDataFrame(
             base_records, "variable string, bin int, expected_frac double"
         )
-        # batch total as a window over the baseline-joined frame — a
-        # groupBy+join of `hist` would evaluate the batch-scan lineage
-        # twice per micro-batch (same single-scan fix as drift._fractions)
-        w = Window.partitionBy("variable")
-        joined = (
-            base.join(hist, ["variable", "bin"], "left")
-            .withColumn("__cnt", F.coalesce(F.col("count"), F.lit(0)))
-            .withColumn("__tot", F.sum("__cnt").over(w))
-            .select(
-                "variable",
-                "expected_frac",
-                F.col("__tot").alias("n_rows"),
-                (F.col("__cnt") / F.greatest(F.col("__tot"), F.lit(1))).alias(
-                    "actual_frac"
-                ),
-            )
-        )
-        ec = F.greatest(F.col("expected_frac"), F.lit(float(min_frac)))
-        ac = F.greatest(F.col("actual_frac"), F.lit(float(min_frac)))
+        fr = _drift._fractions(base, bin_histogram(batch_df, specs), {"count": "actual"})
         metrics = (
-            joined.filter(F.col("n_rows") > 0)  # empty batch: no signal
-            .groupBy("variable")
+            fr.groupBy("variable")
             .agg(
-                F.max("n_rows").alias("n_rows"),
-                F.sum((ac - ec) * F.log(ac / ec)).alias("psi"),
+                F.sum("actual_count").alias("n_rows"),
+                F.sum(
+                    _drift._psi_component(F.col("expected_frac"), F.col("actual_frac"), min_frac)
+                ).alias("psi"),
             )
+            .filter(F.col("n_rows") > 0)  # empty batch: no signal
             .select(
                 F.lit(batch_id).alias("batch_id"),
                 "variable",
